@@ -41,9 +41,13 @@ def unit(a: Column) -> Column:
     FLOP cut in the stage that dominates blocked kNN/near-dup verify
     (``cosine(a, b)`` recomputes both self-dots per pair).  Bit-exactly
     mirrorable in DuckDB (same left-to-right fold, IEEE sqrt/divide), so
-    prenormalized operators stay oracle-hashable."""
-    n = norm(a)
-    return F.transform(a, lambda x: x.cast('double') / n)
+    prenormalized operators stay oracle-hashable.
+
+    The norm enters the HOF as an ARGUMENT (``array_repeat``), never as a
+    lambda capture: a captured ``norm(a)`` re-runs the whole dot product
+    for every element — O(dim²) per row (the HOF rule, PLANS.md §5ai)."""
+    return F.zip_with(a, F.array_repeat(norm(a), F.size(a)),
+                      lambda x, m: x.cast('double') / m)
 
 
 def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> List[List[float]]:

@@ -20,6 +20,7 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.similarity import dot, unit
 from ..functions.text import fingerprint, token_count, tokens
@@ -56,7 +57,15 @@ def shingles(
     a full shuffle of every (id, shingle) pair; pass ``distinct=False``
     where duplicates don't change the result (MinHash signatures: ``min``
     over a multiset equals ``min`` over its set)."""
-    toks = tokens(F.col(text_col))
+    out = df.select(F.col(id_col).alias('id'),
+                    F.explode(shingle_array(F.col(text_col), n)).alias('shingle'))
+    return out.distinct() if distinct else out
+
+
+def shingle_array(text: Column, n: int = 3) -> Column:
+    """array<string> of the word n-grams of ``text``'s normal form, in
+    order, duplicates kept (the per-row half of ``shingles``)."""
+    toks = tokens(text)
     m = F.size(toks) - F.lit(n - 1)
     g = F.slice(toks, 1, m)
     for j in range(1, n):
@@ -64,9 +73,7 @@ def shingles(
                        lambda x, y: F.concat(x, F.lit(' '), y))
     # guard: Spark slice with negative length errors; short docs get an
     # empty shingle set instead
-    sh = F.when(F.size(toks) < n, F.array().cast('array<string>')).otherwise(g)
-    out = df.select(F.col(id_col).alias('id'), F.explode(sh).alias('shingle'))
-    return out.distinct() if distinct else out
+    return F.when(F.size(toks) < n, F.array().cast('array<string>')).otherwise(g)
 
 
 def ngram_jaccard_pairs(
@@ -181,22 +188,21 @@ def minhash_lsh_candidates(
     explosion at the default cap.  The join form keeps per-row width
     constant, lets AQE's skew-join split a hot bucket across tasks, and
     Spark's ReuseExchange dedupes the two identical join inputs, so the
-    bucket stream is still shuffled once."""
-    sigs = minhash_signatures(df, id_col, text_col, n, bands)
-    buckets = sigs.select(
-        'id',
-        F.posexplode(F.array(*[F.col(f'sig_{j}') for j in range(bands)])).alias('band', 'sig'),
-    ).select('id', F.concat(F.col('band').cast('string'), F.lit('|'), F.col('sig')).alias('bucket'))
+    bucket stream is still shuffled once.
+
+    The bucket size is a ``count(*) OVER (PARTITION BY bucket)`` window,
+    not a groupBy-count joined back: the window's bucket exchange is the
+    one the self-join needs, so sizing costs no aggregate exchange and no
+    extra join."""
     # ids are unique within a bucket (the band index is part of the bucket
     # key and posexplode emits one row per (id, band)), so count(*) is the
     # bucket's membership size
-    ok = (
-        buckets.groupBy('bucket')
-        .agg(F.count('*').alias('k'))
+    k = F.count('*').over(Window.partitionBy('bucket'))
+    eligible = (
+        minhash_buckets(df, id_col, text_col, n, bands)
+        .withColumn('k', k)
         .filter((F.col('k') >= 2) & (F.col('k') <= max_bucket))
-        .select('bucket')
     )
-    eligible = buckets.join(ok, 'bucket')
     a = eligible.select('bucket', F.col('id').alias('id_a'))
     b = eligible.select('bucket', F.col('id').alias('id_b'))
     return (
@@ -213,48 +219,26 @@ def jaccard_for_pairs(
     id_col: str = 'doc_id',
     text_col: str = 'text',
     n: int = 3,
-    shingle_storage: str | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard for a given candidate pair list (id_a, id_b).
 
-    Cost is |pairs| × avg-shingles (two equi-joins + one agg), never
-    all-pairs — this is the verify stage that makes LSH candidates safe to
-    act on.
-
-    The shingle frame feeds THREE consumers (sizes, both join sides).
-    ``shingle_storage`` (a StorageLevel name, e.g. ``'DISK_ONLY'``)
-    persists it once past its distinct so each consumer reads blocks
-    instead of replaying scan + explode + the distinct shuffle — the IO
-    accounting that wins at 100 TB (three O(corpus-token) shuffle writes
-    vs one + a spill write + three local reads).  The default is None
-    (recompute): the round-5 ABAB ledger in BENCH/BASELINE.md measured
-    the DISK_ONLY persist ~25-50% SLOWER at sf0.1 on this host — local
-    recompute of a columnar scan beats materialize-and-reread until the
-    scan itself is the bottleneck — so the persist is a scale knob, not
-    a default."""
-    sh = shingles(df, id_col, text_col, n)
-    if shingle_storage:
-        from pyspark import StorageLevel
-
-        sh = sh.persist(getattr(StorageLevel, shingle_storage))
-    sizes = sh.groupBy('id').agg(F.count('*').alias('sz'))
-    sa = sh.select(F.col('id').alias('id_a'), 'shingle')
-    sb = sh.select(F.col('id').alias('id_b'), 'shingle')
-    inter = (
-        pairs.select('id_a', 'id_b')
-        .join(sa, 'id_a')
-        .join(sb, ['id_b', 'shingle'])
-        .groupBy('id_a', 'id_b')
-        .agg(F.count('*').alias('inter'))
-    )
+    Cost is |pairs| × avg-shingles, never all-pairs — this is the verify
+    stage that makes LSH candidates safe to act on.  Each doc's shingle
+    SET is one ``array_distinct`` array per row (no explode, no shuffle of
+    (id, shingle) rows); the pairs join the sets on each side and
+    J = |A∩B| / (|A|+|B|−|A∩B|) is array arithmetic on the joined row.
+    Pairs with no shared shingle are dropped (the denominator may be 0).
+    Expects distinct pairs and one ``df`` row per id."""
+    sets = df.select(F.col(id_col).alias('id'),
+                     F.array_distinct(shingle_array(F.col(text_col), n)).alias('s'))
+    inter = F.size(F.array_intersect('sa', 'sb'))
     return (
-        inter.join(sizes.withColumnsRenamed({'id': 'id_a', 'sz': 'sz_a'}), 'id_a')
-        .join(sizes.withColumnsRenamed({'id': 'id_b', 'sz': 'sz_b'}), 'id_b')
-        .withColumn(
-            'jaccard',
-            F.round(F.col('inter') / (F.col('sz_a') + F.col('sz_b') - F.col('inter')), 6),
-        )
-        .select('id_a', 'id_b', 'jaccard')
+        pairs.select('id_a', 'id_b')
+        .join(sets.withColumnsRenamed({'id': 'id_a', 's': 'sa'}), 'id_a')
+        .join(sets.withColumnsRenamed({'id': 'id_b', 's': 'sb'}), 'id_b')
+        .filter(inter > 0)
+        .select('id_a', 'id_b', F.round(inter / (F.size('sa') + F.size('sb') - inter), 6)
+                .alias('jaccard'))
     )
 
 
@@ -268,10 +252,16 @@ def connected_components(
 
     ``ids``: DataFrame[id] (one row per node, singletons included);
     ``edges``: DataFrame[id_a, id_b] undirected pairs.  Returns
-    DataFrame[id, cluster_id] where cluster_id = min node id in the
-    component — converges in O(component diameter) rounds, each round one
-    shuffle-join + one shuffle-agg over (edge, label) rows only (labels
-    are ids, never payloads).  The per-round checkpoint truncates the plan
+    DataFrame[id, cluster_id] with one row per ``ids`` row, where
+    cluster_id = min node id in the component —
+    converges in O(component diameter) rounds, each round one shuffle-join
+    + one shuffle-agg over (edge, label) rows only (labels are ids, never
+    payloads).  Labels propagate over the edge endpoints only, so a
+    round's cost scales with the linked nodes, not with ``ids``; one final
+    ``ids LEFT JOIN labels`` makes every other id its own cluster.  An
+    endpoint outside ``ids`` is labelled and propagated like any node (it
+    links its neighbours and may be their cluster_id) but gets no output
+    row.  The per-round checkpoint truncates the plan
     (iterative self-joins otherwise grow the lineage exponentially):
     ``localCheckpoint`` by default, reliable ``checkpoint`` into
     ``checkpoint_dir`` when given (the lost-executor-safe cluster story —
@@ -285,10 +275,13 @@ def connected_components(
     from .checkpointing import make_checkpointer
 
     ckpt = make_checkpointer(checkpoint_dir)
-    und = ckpt(edges.select(F.col('id_a').alias('src'), F.col('id_b').alias('dst')).unionByName(
-        edges.select(F.col('id_b').alias('src'), F.col('id_a').alias('dst'))
-    ).distinct())
-    labels = ckpt(ids.select(F.col('id'), F.col('id').alias('label')))
+    # both directions from ONE pass over the edges (a union of two selects
+    # would plan the whole upstream pipeline once per branch)
+    und = ckpt(edges.select(F.explode(F.array(
+        F.struct(F.col('id_a').alias('src'), F.col('id_b').alias('dst')),
+        F.struct(F.col('id_b').alias('src'), F.col('id_a').alias('dst')),
+    )).alias('e')).select('e.*').distinct())
+    labels = und.select(F.col('src').alias('id'), F.col('src').alias('label')).distinct()
     for _ in range(max_iter):
         nbr = (
             und.join(labels.withColumnsRenamed({'id': 'src', 'label': 'src_label'}), 'src')
@@ -318,7 +311,8 @@ def connected_components(
         changed = obs.get['n_changed'] or 0
         labels = new_labels
         if changed == 0:
-            return labels.withColumnRenamed('label', 'cluster_id')
+            return ids.join(labels, 'id', 'left').select(
+                'id', F.coalesce('label', 'id').alias('cluster_id'))
     raise RuntimeError(f'connected_components did not converge in {max_iter} rounds')
 
 
@@ -331,7 +325,6 @@ def dedup_clusters(
     threshold: float = 0.8,
     max_bucket: int = 10_000,
     max_iter: int = 20,
-    shingle_storage: str | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The operator a training-data pipeline actually runs: MinHash-LSH
@@ -343,15 +336,11 @@ def dedup_clusters(
     Every stage is bucketed/equi-join (no all-pairs path): candidates from
     band buckets (hot-bucket capped), verification joins only candidate
     pairs, components propagate labels in O(diameter) bounded rounds.
-    ``shingle_storage``/``checkpoint_dir`` are the 100-TB knobs: persist
-    the verify stage's shingle frame (see ``jaccard_for_pairs``) and make
-    the label-propagation checkpoints lost-executor-safe
-    (operators/checkpointing.py).
+    ``checkpoint_dir`` is the 100-TB knob: it makes the label-propagation
+    checkpoints lost-executor-safe (operators/checkpointing.py).
     """
     cand = minhash_lsh_candidates(df, id_col, text_col, n, bands, max_bucket)
-    edges = jaccard_for_pairs(
-        cand, df, id_col, text_col, n, shingle_storage=shingle_storage
-    ).filter(F.col('jaccard') >= threshold)
+    edges = jaccard_for_pairs(cand, df, id_col, text_col, n).filter(F.col('jaccard') >= threshold)
     ids = df.select(F.col(id_col).alias('id')).distinct()
     labels = connected_components(ids, edges, max_iter, checkpoint_dir=checkpoint_dir)
     return labels.select(
@@ -755,9 +744,9 @@ def minhash_buckets(
     corpus wave and written partitioned (or bucketed) by ``bucket``;
     every subsequent ingestion batch joins against the stored index with
     a partition-pruned scan instead of re-signing the corpus.  One
-    signature HashAggregate + a narrow posexplode — identical arithmetic
-    to ``minhash_lsh_candidates``' bucket stage (same bucket keys, so an
-    index built here is valid for within-corpus candidates too)."""
+    signature HashAggregate + a narrow posexplode — the bucket stage of
+    ``minhash_lsh_candidates`` itself (same bucket keys, so an index
+    built here is valid for within-corpus candidates too)."""
     sigs = minhash_signatures(df, id_col, text_col, n, bands)
     return sigs.select(
         'id',
@@ -809,8 +798,6 @@ def incremental_dedup(
     row_number window per new doc, and a final left join back to the
     batch universe so every new id gets a verdict row.
     """
-    from pyspark.sql.window import Window
-
     if corpus_df is None:
         raise ValueError('corpus_df is required (Jaccard verify reads its text)')
     if corpus_buckets is None:

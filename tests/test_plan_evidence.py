@@ -116,6 +116,14 @@ def test_minhash_signatures_stay_hash_aggregated(spark):
     assert 'collect_set' not in phys
     assert 'ObjectHashAggregate' not in phys
     assert any(j in phys for j in ('SortMergeJoin', 'ShuffledHashJoin', 'BroadcastHashJoin'))
+    # bucket sizes come from a count(*) OVER (PARTITION BY bucket) window
+    # whose exchange the self-join reuses — no groupBy(bucket).count()
+    # aggregate joined back.  Exchanges per join side: the signature
+    # aggregate and the window's bucket partitioning; plus the final pair
+    # distinct: 5
+    assert 'Window [count(1)' in phys
+    assert 'HashAggregate(keys=[bucket' not in phys
+    assert phys.count('Exchange hashpartitioning(') == 5
 
 
 def test_stratified_sample_is_a_fused_zero_shuffle_filter(spark):

@@ -57,6 +57,12 @@ def test_codebook_geometry_and_determinism(emb, books):
     assert again == books
 
 
+def test_codebooks_reject_a_subspace_split_that_drops_dims(emb):
+    # 8 dims into 3 subspaces would train on 2×3 dims and drop the last 2
+    with pytest.raises(ValueError, match='must divide'):
+        train_pq_codebooks(emb, m_sub=3, n_codes=_N_CODES, iters=1, dim=_DIM)
+
+
 def test_encode_is_a_pure_projection(emb, books):
     enc = pq_encode(emb, books)
     rows = enc.collect()
