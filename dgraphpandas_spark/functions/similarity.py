@@ -70,6 +70,13 @@ def lsh_bucket(vec: Column, planes: Sequence[Sequence[float]]) -> Column:
     return bucket
 
 
+def hamming1_probes(key: Column, n_bits: int) -> Column:
+    """``array(key, key ^ 1, key ^ 2, …, key ^ 2^(n_bits-1))``: ``key`` and
+    every key at Hamming distance 1 from it in its low ``n_bits`` bits —
+    the multi-probe set of a sign-LSH bucket."""
+    return F.array(key, *[key.bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)])
+
+
 def plane_sql_literal(plane: Sequence[float]) -> str:
     """Render one hyperplane as a DuckDB list literal (full float repr so
     both engines see bit-identical constants)."""

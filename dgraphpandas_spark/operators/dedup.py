@@ -7,9 +7,10 @@ Scale design notes (the point at 100 TB):
 - exact dedup: hash-groupBy on md5(text) — partial agg absorbs duplicates
   map-side before the shuffle; only one (hash → min id) pair per group
   crosses the wire.
-- shingle joins: the candidate generator joins on shingle/bucket keys, never
-  all-pairs; ``max_df`` drops ultra-frequent shingles (the classic hot-key
-  guard — a shingle appearing in k docs contributes k² candidate pairs).
+- shingle/bucket joins: every candidate generator is a
+  ``blocking.blocked_pairs`` self-join on a shingle/bucket key, never
+  all-pairs, behind that module's hot-key guard (``max_df`` /
+  ``max_bucket``).
 - MinHash/LSH: signatures are per-doc aggregations (map-side partial);
   candidates only join within a band bucket.
 - All hashes are md5-derived → deterministic, identical in DuckDB oracles.
@@ -24,6 +25,7 @@ from pyspark.sql.window import Window
 
 from ..functions.similarity import dot, unit
 from ..functions.text import fingerprint, token_count, tokens
+from .blocking import blocked_pairs, drop_hot_keys
 
 
 def exact_dedup(df: DataFrame, id_col: str = 'doc_id', text_col: str = 'text') -> DataFrame:
@@ -86,35 +88,30 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs by n-gram Jaccard ≥ threshold.
 
-    shingle-join candidate generation: |A∩B| from a self-join on shingle,
-    |A|,|B| from per-doc counts, J = ∩ / (|A|+|B|−∩).  ``max_df`` removes
-    shingles present in more than max_df docs before the join — the
-    hot-key guard is ON by default (a shingle appearing in k docs yields
-    k² candidate rows; one stopword-ish shingle at 100 TB is a quadratic
-    blowup).  Pass ``max_df=None`` for exact small-data runs; the oracle
-    mirrors the guard.  NB the guard changes |A∩B| only for pairs whose
-    overlap includes an ultra-common shingle, and |A|,|B| stay exact, so
-    guarded Jaccard is a lower bound of the true value.
+    shingle-join candidate generation: |A∩B| from a ``blocked_pairs``
+    self-join on shingle, |A|,|B| from per-doc counts,
+    J = ∩ / (|A|+|B|−∩).  ``max_df`` (ON by default; the guard is
+    ``blocking.drop_hot_keys``) removes shingles present in more than
+    max_df docs from both: guarded Jaccard is Jaccard over the retained
+    shingles.  Pass ``max_df=None`` for exact small-data runs; the oracle
+    mirrors the guard.
     """
     # DISK_ONLY, not memory cache: the shingle frame is O(corpus tokens) —
-    # at 100 TB it cannot live in executor memory, and it is read 4×
-    # (hot-list, sizes, both join sides), so recompute would re-tokenize
-    # the corpus 4×.  Disk spill of the exploded frame is the right trade.
+    # at 100 TB it cannot live in executor memory, and it is read by the
+    # sizes and both join sides, so recompute would re-tokenize the
+    # corpus per reader (without it the sizes branch plans its own
+    # explode).  Persisted AFTER the guard, so the guard's window runs
+    # once and the self-join reuses the cached frame's shingle
+    # partitioning instead of shuffling it again.
     from pyspark import StorageLevel
 
-    sh = shingles(df, id_col, text_col, n).persist(StorageLevel.DISK_ONLY)
+    sh = shingles(df, id_col, text_col, n)
     if max_df:
-        # broadcast the HOT list (small by construction: few ultra-frequent
-        # shingles) and anti-join — not the keep list, which is ~all shingles
-        hot = sh.groupBy('shingle').count().filter(F.col('count') > max_df).select('shingle')
-        sh = sh.join(F.broadcast(hot), 'shingle', 'left_anti')
+        sh = drop_hot_keys(sh, 'shingle', max_df)
+    sh = sh.persist(StorageLevel.DISK_ONLY)
     sizes = sh.groupBy('id').agg(F.count('*').alias('sz'))
-
-    a = sh.select(F.col('id').alias('id_a'), 'shingle')
-    b = sh.select(F.col('id').alias('id_b'), 'shingle')
     inter = (
-        a.join(b, 'shingle')
-        .filter(F.col('id_a') < F.col('id_b'))
+        blocked_pairs(sh, 'shingle')
         .groupBy('id_a', 'id_b')
         .agg(F.count('*').alias('inter'))
     )
@@ -176,10 +173,10 @@ def minhash_lsh_candidates(
     Plan shape matters: ONE signature aggregation (not a per-band union,
     which would recompute the agg per band per join side), bands fanned out
     with a narrow ``posexplode``, then pairs expanded as a *within-bucket
-    self-join* (``a JOIN b ON bucket WHERE id_a < id_b``) — a single
-    logical shuffle on bucket, never an all-pairs join.  ``max_bucket``
-    drops degenerate hot buckets (a bucket of k docs yields k² pairs —
-    the LSH hot-key guard at scale).
+    self-join* (``blocking.blocked_pairs``: ``a JOIN b ON bucket WHERE
+    id_a < id_b``) — a single logical shuffle on bucket, never an
+    all-pairs join.  ``max_bucket`` drops buckets of more than max_bucket
+    docs, so a pair that shares only hot buckets is not a candidate.
 
     Why a self-join and not ``collect_set`` + double ``explode`` (the
     round-3 shape): collect_set is a payload-carrying aggregate partial
@@ -188,29 +185,12 @@ def minhash_lsh_candidates(
     explosion at the default cap.  The join form keeps per-row width
     constant, lets AQE's skew-join split a hot bucket across tasks, and
     Spark's ReuseExchange dedupes the two identical join inputs, so the
-    bucket stream is still shuffled once.
-
-    The bucket size is a ``count(*) OVER (PARTITION BY bucket)`` window,
-    not a groupBy-count joined back: the window's bucket exchange is the
-    one the self-join needs, so sizing costs no aggregate exchange and no
-    extra join."""
+    bucket stream is still shuffled once."""
     # ids are unique within a bucket (the band index is part of the bucket
-    # key and posexplode emits one row per (id, band)), so count(*) is the
-    # bucket's membership size
-    k = F.count('*').over(Window.partitionBy('bucket'))
-    eligible = (
-        minhash_buckets(df, id_col, text_col, n, bands)
-        .withColumn('k', k)
-        .filter((F.col('k') >= 2) & (F.col('k') <= max_bucket))
-    )
-    a = eligible.select('bucket', F.col('id').alias('id_a'))
-    b = eligible.select('bucket', F.col('id').alias('id_b'))
-    return (
-        a.join(b, 'bucket')
-        .filter(F.col('id_a') < F.col('id_b'))
-        .select('id_a', 'id_b')
-        .distinct()
-    )
+    # key and posexplode emits one row per (id, band)), so the guard's
+    # row count is the bucket's membership size
+    buckets = minhash_buckets(df, id_col, text_col, n, bands)
+    return blocked_pairs(buckets, 'bucket', max_bucket).select('id_a', 'id_b').distinct()
 
 
 def jaccard_for_pairs(
@@ -413,9 +393,10 @@ def embedding_neardup_pairs_lsh(
     exactly one hyperplane.  Raises per-pair recall from p^P to
     p^P + P·p^(P-1)(1−p) without coarsening the blocks.
 
-    ``max_bucket`` (ON by default) drops degenerate hot buckets before the
-    self-join — a bucket of k vectors yields k² scored rows, the same
-    quadratic hot-key failure as a hot shingle; mirrored in the oracle."""
+    ``max_bucket`` (ON by default; the ``blocking.blocked_pairs`` guard)
+    drops buckets of more than max_bucket vectors before the undirected
+    self-join, so their pairs are not scored; mirrored in the oracle.  A
+    probed pair is lost only if one of its two buckets is hot."""
     from ..functions.similarity import hyperplanes, lsh_bucket
 
     planes = hyperplanes(n_planes, dim, seed)
@@ -426,30 +407,13 @@ def embedding_neardup_pairs_lsh(
         unit(F.col(vec_col)).alias('v'),
         lsh_bucket(F.col(vec_col), planes).alias('bucket'),
     )
-    if max_bucket:
-        # broadcast the HOT bucket list (small by construction) + anti-join
-        hot = (
-            bucketed.groupBy('bucket').count()
-            .filter(F.col('count') > max_bucket)
-            .select('bucket')
-        )
-        bucketed = bucketed.join(F.broadcast(hot), 'bucket', 'left_anti')
-    a = bucketed.select(F.col('id').alias('id_a'), F.col('v').alias('va'), 'bucket')
-    b_src = bucketed
-    if multi_probe:
-        # asymmetric expansion: only ONE side probes its bit-flip neighbors,
-        # so a pair at Hamming distance 1 meets exactly where the flipped
-        # bit matches the other side's true bucket
-        probes = F.array(
-            F.col('bucket'),
-            *[F.col('bucket').bitwiseXOR(F.lit(2 ** i)) for i in range(n_planes)],
-        )
-        b_src = bucketed.select('id', 'v', F.explode(probes).alias('bucket'))
-    b = b_src.select(F.col('id').alias('id_b'), F.col('v').alias('vb'), 'bucket')
+    # asymmetric expansion: only ONE side probes its bit-flip neighbors,
+    # so a pair at Hamming distance 1 meets exactly where the flipped bit
+    # matches the other side's true bucket
     return (
-        a.join(b, 'bucket')
-        .filter(F.col('id_a') < F.col('id_b'))
-        .withColumn('cos', F.round(dot(F.col('va'), F.col('vb')), 6))
+        blocked_pairs(bucketed, 'bucket', max_bucket or None,
+                      probe_bits=n_planes if multi_probe else 0)
+        .withColumn('cos', F.round(dot(F.col('v_a'), F.col('v_b')), 6))
         .filter(F.col('cos') >= threshold)
         .select('id_a', 'id_b', 'cos')
         .distinct()
@@ -493,13 +457,11 @@ def semantic_dedup(
     assigned = ivf_assign(df, vec_col=vec_col, centroids=centroids).select(
         F.col(id_col).alias('id'), unit(F.col(vec_col)).alias('v'), 'cell'
     )
-    a = assigned.select(F.col('id').alias('id_a'), F.col('v').alias('va'), 'cell')
-    b = assigned.select(F.col('id').alias('id_b'), F.col('v').alias('vb'), 'cell')
+    # the higher id of each close within-cell pair is the duplicate
     dups = (
-        a.join(b, 'cell')
-        .filter(F.col('id_a') > F.col('id_b'))
-        .filter(F.round(dot(F.col('va'), F.col('vb')), 6) >= threshold)
-        .select(F.col('id_a').alias('id'))
+        blocked_pairs(assigned, 'cell')
+        .filter(F.round(dot(F.col('v_a'), F.col('v_b')), 6) >= threshold)
+        .select(F.col('id_b').alias('id'))
         .distinct()
     )
     return (
@@ -695,14 +657,14 @@ def containment_pairs(
     containment_ppm = |fp(A) ∩ fp(B)| · 1e6 DIV |fp(A)| ≥
     ``threshold_ppm`` (integer ppm — engine-portable, no float ratio).
 
-    Scale shape: fingerprints explode to (id, fp) rows; hashes shared by
-    more than ``max_df`` docs are dropped FIRST (the stopword-gram hot
-    guard of ``ngram_jaccard_dedup``, audited by the denominator: ``n_a``
-    counts RETAINED fingerprints, so the ratio stays consistent); the
-    candidate generator is one equi-join on the 60-bit hash (never
-    all-pairs, per-hash fan-out ≤ max_df²) into one (id_a, id_b)
-    HashAggregate; the per-doc size joins back broadcast-eligible.  Docs
-    shorter than ``k`` tokens fingerprint to ∅ and emit nothing.
+    Scale shape: fingerprints explode to (id, fp) rows; hashes held by
+    more than ``max_df`` fingerprint rows are dropped FIRST
+    (``blocking.drop_hot_keys``), and ``n_a`` counts the RETAINED
+    fingerprints, so the ratio stays consistent; the candidate generator
+    is one directed ``blocked_pairs`` equi-join on the 60-bit hash (never
+    all-pairs) into one (id_a, id_b) HashAggregate; the per-doc size
+    joins back broadcast-eligible.  Docs shorter than ``k`` tokens
+    fingerprint to ∅ and emit nothing.
     """
     from ..functions.text import winnow_fingerprints
 
@@ -710,13 +672,10 @@ def containment_pairs(
         F.col(id_col).alias('id'),
         F.explode(winnow_fingerprints(F.col(text_col), k=k, w=w)).alias('fp'),
     )
-    ok = fp.groupBy('fp').agg(F.count('*').alias('df_')).filter(F.col('df_') <= max_df)
-    kept = fp.join(ok.select('fp'), 'fp')
+    kept = drop_hot_keys(fp, 'fp', max_df)
     sizes = kept.groupBy('id').agg(F.count('*').alias('n'))
     shared = (
-        kept.select(F.col('id').alias('id_a'), 'fp')
-        .join(kept.select(F.col('id').alias('id_b'), 'fp'), 'fp')
-        .filter(F.col('id_a') != F.col('id_b'))
+        blocked_pairs(kept, 'fp', directed=True)
         .groupBy('id_a', 'id_b')
         .agg(F.count('*').alias('shared'))
     )
@@ -759,7 +718,7 @@ def minhash_buckets(
 
 def incremental_dedup(
     new_df: DataFrame,
-    corpus_df: DataFrame = None,
+    corpus_df: DataFrame,
     id_col: str = 'doc_id',
     text_col: str = 'text',
     n: int = 3,
@@ -786,11 +745,11 @@ def incremental_dedup(
     ``corpus_buckets``: pass a precomputed ``minhash_buckets`` frame
     (e.g. read back from a bucket-partitioned table) to skip re-signing
     the corpus — the steady-state path; ``corpus_df`` is then only needed
-    for the Jaccard verify shingles.  The hot-bucket guard caps CORPUS
-    bucket membership (a stopword-degenerate bucket pairs every new doc
-    with ``k`` corpus docs); like ``knn_graph`` the cap is a recall
-    guard, mirrored by the oracle, and at ``max_bucket=10_000`` only
-    degenerate buckets hit it.
+    for the Jaccard verify shingles.  The hot-bucket guard
+    (``blocking.drop_hot_keys``) caps CORPUS bucket membership: a new doc
+    is not paired through a corpus bucket of more than ``max_bucket``
+    docs.  Like ``knn_graph`` the cap is a recall guard, mirrored by the
+    oracle, and at ``max_bucket=10_000`` only degenerate buckets hit it.
 
     Plan shape: one equi-join on bucket (batch side small → broadcast-
     eligible under AQE), DISTINCT pair projection, the bounded
@@ -798,19 +757,11 @@ def incremental_dedup(
     row_number window per new doc, and a final left join back to the
     batch universe so every new id gets a verdict row.
     """
-    if corpus_df is None:
-        raise ValueError('corpus_df is required (Jaccard verify reads its text)')
     if corpus_buckets is None:
         corpus_buckets = minhash_buckets(corpus_df, id_col, text_col, n, bands)
     new_buckets = minhash_buckets(new_df, id_col, text_col, n, bands)
-    ok = (
-        corpus_buckets.groupBy('bucket')
-        .agg(F.count('*').alias('k'))
-        .filter(F.col('k') <= max_bucket)
-        .select('bucket')
-    )
     pairs = (
-        new_buckets.join(corpus_buckets.join(ok, 'bucket')
+        new_buckets.join(drop_hot_keys(corpus_buckets, 'bucket', max_bucket)
                          .select('bucket', F.col('id').alias('id_b')), 'bucket')
         .select(F.col('id').alias('id_a'), 'id_b')
         .distinct()

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .blocking import blocked_pairs
 from .checkpointing import make_checkpointer
 
 
@@ -338,32 +339,18 @@ def bipartite_project(
     graph ("which tools appear in the same conversations") — the standard
     entity-affinity view.
 
-    Scale shape: the projection is the textbook bipartite explosion — a
-    src with degree d emits d² pairs, so one hot conversation touching
-    10^5 tools would emit 10^10 rows.  ``max_src_degree`` is therefore ON
-    by default (same pattern as dedup's ``max_df`` hot-shingle guard):
-    srcs above the cap are dropped from the projection via a key-only
-    aggregate + broadcast-friendly anti-join BEFORE the self-join.  The
-    self-join itself is an equi-join on src (never all-pairs); the final
-    weight rollup is a hash-groupBy on the (a, b) pair with map-side
-    partials.  Edges are deduped to DISTINCT (src, dst) first so weight
-    counts conversations, not event multiplicity.
+    Scale shape: the projection is the textbook bipartite explosion, an
+    undirected ``blocking.blocked_pairs`` self-join on src (never
+    all-pairs).  ``max_src_degree`` is that module's hot-key guard, ON by
+    default: a src with more distinct dsts than the cap contributes no
+    pairs.  The final weight rollup is a hash-groupBy on the (a, b) pair
+    with map-side partials.  Edges are deduped to DISTINCT (src, dst)
+    first so weight counts conversations, not event multiplicity.
     """
-    e = edges.select(F.col(src).alias('src'), F.col(dst).alias('dst')).distinct()
-    if max_src_degree is not None:
-        hot = (
-            e.groupBy('src')
-            .agg(F.count('*').alias('d'))
-            .filter(F.col('d') > max_src_degree)
-            .select('src')
-        )
-        e = e.join(hot, 'src', 'left_anti')
-    a = e.select('src', F.col('dst').alias('a'))
-    b = e.select('src', F.col('dst').alias('b'))
+    e = edges.select(F.col(src).alias('src'), F.col(dst).alias('id')).distinct()
     return (
-        a.join(b, 'src')
-        .filter(F.col('a') < F.col('b'))
-        .groupBy('a', 'b')
+        blocked_pairs(e, 'src', max_src_degree)
+        .groupBy(F.col('id_a').alias('a'), F.col('id_b').alias('b'))
         .agg(F.count('*').alias('weight'))
     )
 

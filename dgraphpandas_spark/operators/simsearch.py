@@ -17,7 +17,10 @@ from typing import List, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.similarity import cosine, dot, hyperplanes, ivf_cell, lsh_bucket, unit
+from ..functions.similarity import (
+    cosine, dot, hamming1_probes, hyperplanes, ivf_cell, lsh_bucket, unit,
+)
+from .blocking import blocked_pairs
 
 
 def brute_force_topk(
@@ -581,7 +584,8 @@ def knn_graph(
     ascending neighbor id — a total order, engine-portable).
 
     Candidate generation is the sign-LSH block join of
-    ``dedup.embedding_neardup_pairs_lsh`` made DIRECTED: node x collects
+    ``dedup.embedding_neardup_pairs_lsh`` made DIRECTED
+    (``blocking.blocked_pairs(directed=True)``): node x collects
     every y whose Hamming-distance from x's bucket is ≤ 1 (with
     ``multi_probe``; 0 otherwise).  The probe expansion is asymmetric
     (only the build side explodes to its P+1 bit-flip buckets), which
@@ -602,7 +606,8 @@ def knn_graph(
     a FALLBACK join instead — re-bucketed with ``n_sub_planes`` extra
     hyperplanes (independent seed), splitting each hot bucket into up to
     2^n_sub_planes refinements, and joined within (bucket, sub) with the
-    same asymmetric Hamming-1 probe expansion over the sub bits.  Hot
+    same asymmetric Hamming-1 probe expansion over the sub bits (one
+    composite ``bucket·2^n_sub_planes + sub`` key, its low bits probed).  Hot
     members meet only hot members of the same original bucket, so no
     pair can arise from both paths and no dedup pass is needed.  Hot
     buckets are detected by an eager key-only count (result bounded by
@@ -643,8 +648,7 @@ def knn_graph(
             F.col(id_col).alias('id'), unit(F.col(vec_col)).alias('v'),
             F.col('cell').alias('bucket'),
         )
-        a = bucketed.select('id', F.col('v').alias('va'), 'bucket')
-        b = bucketed.select(F.col('id').alias('nbr'), F.col('v').alias('vb'), 'bucket')
+        pairs = blocked_pairs(bucketed, 'bucket', directed=True)
     else:
         planes = hyperplanes(n_planes, dim, seed)
         # bucket from the RAW vector (sign-LSH is scale-invariant in exact
@@ -658,6 +662,9 @@ def knn_graph(
         hot_buckets: list = []
         if max_bucket:
             # Eager key-only detection: ≤ 2^n_planes rows — metadata-scale.
+            # The hot list is needed at plan time (audit, and no fallback
+            # branch unless a bucket is hot), so the rows reach
+            # blocked_pairs already filtered.
             hot_rows = (
                 bucketed.groupBy('bucket').count()
                 .filter(F.col('count') > max_bucket)
@@ -669,54 +676,30 @@ def knn_graph(
                 audit['hot_nodes'] = int(sum(r['count'] for r in hot_rows))
             if hot_buckets:
                 bucketed = bucketed.filter(~F.col('bucket').isin(hot_buckets))
-        a = bucketed.select(F.col('id'), F.col('v').alias('va'), 'bucket')
-        b_src = bucketed
-        if multi_probe:
-            probes = F.array(
-                F.col('bucket'),
-                *[F.col('bucket').bitwiseXOR(F.lit(2 ** i)) for i in range(n_planes)],
+        pairs = blocked_pairs(bucketed, 'bucket', probe_bits=n_planes if multi_probe else 0,
+                              directed=True)
+        if hot_buckets:
+            # Fallback routing for hot-bucket members: refine with
+            # independent extra planes, join within (bucket, sub) — one
+            # composite key whose low n_sub_planes bits are the sub bucket,
+            # so probing them flips sub bits only.  Hot meets only hot of
+            # the same original bucket — disjoint from the primary join's
+            # pairs, so a plain unionByName is duplicate-free.  Both bucket
+            # AND sub come from the RAW vector (see above); v is
+            # prenormalized for the one-dot cosine.
+            sub_planes = hyperplanes(n_sub_planes, dim, seed + 104_729)
+            hot_ref = df.select(
+                F.col(id_col).alias('id'),
+                unit(F.col(vec_col)).alias('v'),
+                lsh_bucket(F.col(vec_col), planes).alias('bucket'),
+                lsh_bucket(F.col(vec_col), sub_planes).alias('sub'),
+            ).filter(F.col('bucket').isin(hot_buckets)).select(
+                'id', 'v', (F.col('bucket') * (1 << n_sub_planes) + F.col('sub')).alias('bucket'),
             )
-            b_src = bucketed.select('id', 'v', F.explode(probes).alias('bucket'))
-        b = b_src.select(F.col('id').alias('nbr'), F.col('v').alias('vb'), 'bucket')
-    cand = (
-        a.join(b, 'bucket')
-        .filter(F.col('id') != F.col('nbr'))
-        .select('id', 'nbr', F.round(dot(F.col('va'), F.col('vb')), 6).alias('cos'))
-    )
-    if method != 'ivf' and max_bucket and hot_buckets:
-        # Fallback routing for hot-bucket members: refine with independent
-        # extra planes, join within (bucket, sub).  Hot meets only hot of
-        # the same original bucket — disjoint from the primary join's
-        # pairs, so a plain unionByName is duplicate-free.
-        # Both bucket AND sub come from the RAW vector (see above); v is
-        # prenormalized for the one-dot cosine.
-        sub_planes = hyperplanes(n_sub_planes, dim, seed + 104_729)
-        hot_ref = df.select(
-            F.col(id_col).alias('id'),
-            unit(F.col(vec_col)).alias('v'),
-            lsh_bucket(F.col(vec_col), planes).alias('bucket'),
-            lsh_bucket(F.col(vec_col), sub_planes).alias('sub'),
-        ).filter(F.col('bucket').isin(hot_buckets))
-        ha = hot_ref.select('id', F.col('v').alias('va'), 'bucket', 'sub')
-        hb_src = hot_ref
-        if multi_probe:
-            sub_probes = F.array(
-                F.col('sub'),
-                *[F.col('sub').bitwiseXOR(F.lit(2 ** i)) for i in range(n_sub_planes)],
-            )
-            hb_src = hot_ref.select(
-                'id', 'v', 'bucket', F.explode(sub_probes).alias('sub')
-            )
-        hb = hb_src.select(
-            F.col('id').alias('nbr'), F.col('v').alias('vb'), 'bucket', 'sub'
-        )
-        hot_cand = (
-            ha.join(hb, ['bucket', 'sub'])
-            .filter(F.col('id') != F.col('nbr'))
-            .select('id', 'nbr',
-                    F.round(dot(F.col('va'), F.col('vb')), 6).alias('cos'))
-        )
-        cand = cand.unionByName(hot_cand)
+            pairs = pairs.unionByName(blocked_pairs(
+                hot_ref, 'bucket', probe_bits=n_sub_planes if multi_probe else 0, directed=True))
+    cand = pairs.select(F.col('id_a').alias('id'), F.col('id_b').alias('nbr'),
+                        F.round(dot(F.col('v_a'), F.col('v_b')), 6).alias('cos'))
     w = Window.partitionBy('id').orderBy(F.desc('cos'), F.asc('nbr'))
     return (
         cand.withColumn('rank', F.row_number().over(w))
@@ -786,11 +769,8 @@ def knn_classify(
         r = r.withColumn('bucket', lsh_bucket(F.col('rraw'), planes))
         qb = q.withColumn('bucket', lsh_bucket(F.col('qraw'), planes))
         if multi_probe:
-            probes = F.array(
-                F.col('bucket'),
-                *[F.col('bucket').bitwiseXOR(F.lit(2 ** i)) for i in range(n_planes)],
-            )
-            qb = qb.select('qid', 'qv', F.explode(probes).alias('bucket'))
+            qb = qb.select('qid', 'qv', F.explode(hamming1_probes(F.col('bucket'), n_planes))
+                           .alias('bucket'))
         cand = r.join(F.broadcast(qb), 'bucket')
     else:
         cand = r.crossJoin(F.broadcast(q.select('qid', 'qv')))
